@@ -18,9 +18,12 @@ partitioned decode loop (R7) matters: each frame parses with exactly
 its writer schema.
 
 Like :mod:`jibaro_spark.codecs.proto_python`: slicing stays native,
-the payload parse is an Arrow-batched ``mapInPandas`` map-only pass,
-and the JVM ``from_avro`` dispatcher remains the production fast path
-where the jar exists.
+and the payload parse is ONE Arrow-batched ``mapInPandas`` map-only
+pass per schema pair that decodes key and value together and ships
+back the decoded structs, not the payloads
+(:func:`~jibaro_spark.codecs.confluent.map_payloads`).  The JVM
+``from_avro`` dispatcher remains the production fast path where the
+jar exists.
 
 Supported Spark types: string, binary, boolean, int/short, long,
 float, double, arrays, string-keyed maps, nested structs.
@@ -28,6 +31,7 @@ float, double, arrays, string-keyed maps, nested structs.
 
 from __future__ import annotations
 
+import functools
 import struct as _struct
 
 from pyspark.sql import DataFrame
@@ -203,6 +207,33 @@ def _write(out: bytearray, v, dt: T.DataType, nullable: bool) -> None:
         raise TypeError(f"avro_python: unsupported type {dt}")
 
 
+def _parser(schema: T.StructType, mode: str):
+    """``bytes -> dict`` for one top-level record of ``schema`` (no
+    outer union) under ``mode``."""
+
+    def parse(b):
+        if b is None:
+            return None
+        rdr = _Reader(bytes(b))
+        if mode == "failfast":
+            return _read(rdr, schema, nullable=False)
+        try:
+            val = _read(rdr, schema, nullable=False)
+        except Exception:
+            return None
+        # spec frames decode exactly; trailing garbage = corrupt
+        return val if rdr.pos == len(rdr.buf) else None
+
+    return parse
+
+
+def _spec(schema: T.StructType, mode: str = "failfast"):
+    """``(out_type, make_parse)`` of one payload column for
+    :func:`~jibaro_spark.codecs.confluent.map_payloads`."""
+    _check_supported(schema, "$")
+    return schema, functools.partial(_parser, schema, mode)
+
+
 def decode_avro_python(
     df: DataFrame,
     payload_col: str,
@@ -212,7 +243,8 @@ def decode_avro_python(
 ) -> DataFrame:
     """Parse an Avro-binary payload column (writer schema = the Avro
     derivation of ``schema``, per ``to_avro_schema`` conventions) into
-    a typed struct column — Arrow-batched, map-only.
+    a typed struct column appended to ``df`` — one Arrow pass,
+    map-only.
 
     ``mode``: ``failfast`` (default — a corrupt frame aborts the batch,
     the reference's FAILFAST stance, ``avro_handler.py:25``) or
@@ -220,34 +252,13 @@ def decode_avro_python(
     so a ``{out_col} IS NULL AND {payload_col} IS NOT NULL`` filter
     routes them to quarantine instead of poisoning 100 TB of good rows
     (the ``parse_json_quarantine`` philosophy)."""
+    from jibaro_spark.codecs.confluent import map_payloads
+
     if mode not in ("failfast", "permissive"):
         raise ValueError(f"decode_avro_python: unknown mode {mode!r}")
-    _check_supported(schema, "$")
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out_col, schema)]
+    return map_payloads(
+        df, [(payload_col, out_col, *_spec(schema, mode))], df.columns
     )
-
-    def mapper(batches):
-        def parse(b):
-            if b is None:
-                return None
-            # top-level record: fields in order (no outer union)
-            rdr = _Reader(bytes(b))
-            if mode == "failfast":
-                return _read(rdr, schema, nullable=False)
-            try:
-                val = _read(rdr, schema, nullable=False)
-            except Exception:
-                return None
-            # spec frames decode exactly; trailing garbage = corrupt
-            return val if rdr.pos == len(rdr.buf) else None
-
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[out_col] = pdf[payload_col].map(parse)
-            yield pdf
-
-    return df.mapInPandas(mapper, out_schema)
 
 
 def encode_avro_python(
@@ -295,68 +306,23 @@ def decode_confluent_batch_avro_python(
 ) -> list:
     """Schema-partitioned Confluent Avro decode (R7) on the Python
     codec — same native slicing + pair loop as the jar path (shared
-    :func:`~jibaro_spark.codecs.confluent.pair_frames` skeleton, incl.
+    :func:`~jibaro_spark.codecs.confluent.decode_pairs_python`, incl.
     the staged many-schema route and the unknown-schema policy); each
-    pair's payloads parse with exactly that pair's reader schema
-    (``schema_resolver(role, id) -> StructType``)."""
-    from pyspark.sql import functions as F
+    pair's key and value payloads parse with exactly that pair's reader
+    schemas (``schema_resolver(role, id) -> StructType``) in one Arrow
+    pass."""
+    from jibaro_spark.codecs.confluent import decode_pairs_python
 
-    from jibaro_spark.codecs.confluent import (
-        KAFKA_META_COLS,
-        SPILL_THRESHOLD,
-        pair_frames,
-        resolve_schema_or_policy,
-        split_wire_format,
-    )
-
-    sliced = split_wire_format(batch, "avro")
-    out = []
-    for key_id, value_id, part in pair_frames(
-        sliced,
+    return decode_pairs_python(
+        batch,
+        "avro",
+        schema_resolver,
+        lambda _role, schema: _spec(schema),
         on_tombstone,
         scratch_dir,
-        SPILL_THRESHOLD if spill_threshold is None else spill_threshold,
-    ):
-        pair = (key_id, value_id)
-        kschema, kq = resolve_schema_or_policy(
-            schema_resolver, "key", key_id, pair, on_unknown_schema
-        )
-        vschema, vq = resolve_schema_or_policy(
-            schema_resolver, "value", value_id, pair, on_unknown_schema
-        )
-        if (key_id is not None and kschema is None) or (
-            value_id is not None and vschema is None
-        ):
-            if kq or vq:  # keep: raw-binary dead-letter frame
-                out.append(
-                    (
-                        pair,
-                        part.select(
-                            F.col("keyPayload").alias("key"),
-                            F.col("valuePayload").alias("value"),
-                            *[c for c in KAFKA_META_COLS if c in part.columns],
-                            "keySchemaId",
-                            "valueSchemaId",
-                        ),
-                    )
-                )
-            continue
-        part = part.drop("key", "value")
-        if value_id is not None:
-            part = decode_avro_python(part, "valuePayload", vschema, "value")
-        else:
-            part = part.withColumn("value", F.lit(None))
-        if key_id is not None:
-            part = decode_avro_python(part, "keyPayload", kschema, "key")
-        else:
-            part = part.withColumn("key", F.lit(None).cast("string"))
-        keep = (
-            ["key", "value"]
-            + [c for c in KAFKA_META_COLS if c in part.columns]
-            + ["keySchemaId", "valueSchemaId"]
-        )
-        out.append(((key_id, value_id), part.select(*keep)))
-    return out
+        spill_threshold,
+        on_unknown_schema,
+    )
 
 
 def encode_confluent_avro_python(

@@ -700,6 +700,122 @@ def decode_confluent_batch_pairs(
     return out
 
 
+def map_payloads(
+    df: DataFrame,
+    specs: "list[tuple[str, str, object, Callable[[], Callable]]]",
+    passthrough: "list[str]",
+) -> DataFrame:
+    """Decode every payload column of ``df`` in ONE Arrow
+    ``mapInPandas`` pass — the data path of the pure-Python lanes
+    (:mod:`~jibaro_spark.codecs.avro_python`,
+    :mod:`~jibaro_spark.codecs.proto_python`).
+
+    ``specs`` is ``[(payload_col, out_col, out_type, make_parse)]``;
+    ``make_parse()`` runs once per task on the worker (where codec
+    state such as a protobuf message class is built) and returns the
+    ``bytes -> value`` parser.  The output holds the ``passthrough``
+    columns, then one ``out_col`` per spec; a payload column not
+    passed through is never shipped back to the JVM."""
+    from pyspark.sql import types as T
+
+    fields = {f.name: f for f in df.schema.fields}
+    out_schema = T.StructType(
+        [fields[c] for c in passthrough]
+        + [T.StructField(out, t) for _p, out, t, _m in specs]
+    )
+    needed = list(dict.fromkeys([*passthrough, *(p for p, *_ in specs)]))
+    drop = [c for c in needed if c not in passthrough]
+    if needed != df.columns:
+        df = df.select(*needed)
+
+    def mapper(batches):
+        parsers = [(p, out, make()) for p, out, _t, make in specs]
+        for pdf in batches:
+            decoded = [(out, pdf[p].map(parse)) for p, out, parse in parsers]
+            if drop:
+                pdf = pdf.drop(columns=drop)
+            for out, col in decoded:
+                pdf[out] = col
+            yield pdf
+
+    return df.mapInPandas(mapper, out_schema)
+
+
+def decode_pairs_python(
+    batch: DataFrame,
+    content_type: str,
+    schema_resolver: "Callable[[str, int], object]",
+    spec_for: "Callable[[str, object], tuple[object, Callable[[], Callable]]]",
+    on_tombstone: str = "drop",
+    scratch_dir: "str | None" = None,
+    spill_threshold: "int | None" = None,
+    on_unknown_schema: str = "error",
+) -> list[tuple[tuple[int | None, int | None], DataFrame]]:
+    """Schema-partitioned Confluent decode (R7) on a pure-Python codec:
+    the same native slicing and :func:`pair_frames` loop as the jar
+    path (incl. the staged many-schema route and the unknown-schema
+    policy), with each pair's key AND value parsed in one
+    :func:`map_payloads` pass with exactly that pair's schemas.
+
+    ``schema_resolver(role, id)`` gives the reader schema per id;
+    ``spec_for(role, schema)`` gives ``(out_type, make_parse)`` for
+    the role ``"key"``/``"value"``.  Returns ``[(pair, DataFrame)]``
+    with ``key, value``, the Kafka metadata and both schema ids."""
+    sliced = split_wire_format(batch, content_type)
+    out = []
+    for key_id, value_id, part in pair_frames(
+        sliced,
+        on_tombstone,
+        scratch_dir,
+        SPILL_THRESHOLD if spill_threshold is None else spill_threshold,
+    ):
+        pair = (key_id, value_id)
+        kschema, kq = resolve_schema_or_policy(
+            schema_resolver, "key", key_id, pair, on_unknown_schema
+        )
+        vschema, vq = resolve_schema_or_policy(
+            schema_resolver, "value", value_id, pair, on_unknown_schema
+        )
+        meta = [c for c in KAFKA_META_COLS if c in part.columns] + [
+            "keySchemaId",
+            "valueSchemaId",
+        ]
+        if (key_id is not None and kschema is None) or (
+            value_id is not None and vschema is None
+        ):
+            if kq or vq:  # keep: raw-binary dead-letter frame
+                out.append(
+                    (
+                        pair,
+                        part.select(
+                            F.col("keyPayload").alias("key"),
+                            F.col("valuePayload").alias("value"),
+                            *meta,
+                        ),
+                    )
+                )
+            continue  # skip: drop the unresolvable pair
+        specs = [
+            (f"{role}Payload", role, *spec_for(role, schema))
+            for role, sid, schema in (
+                ("value", value_id, vschema),
+                ("key", key_id, kschema),
+            )
+            if sid is not None
+        ]
+        if specs:
+            part = map_payloads(part, specs, meta)
+        cols = [
+            F.col("key")
+            if key_id is not None
+            else F.lit(None).cast("string").alias("key"),
+            F.col("value") if value_id is not None else F.lit(None).alias("value"),
+            *meta,
+        ]
+        out.append((pair, part.select(*cols)))
+    return out
+
+
 def encode_confluent(
     df: DataFrame,
     key_cols: list[str],

@@ -10,10 +10,12 @@ all, which is an operational win even where protoc exists.
 
 Pipeline shape: the wire-format slicing stays native/JVM-side
 (:mod:`jibaro_spark.codecs.confluent`); only the payload parse runs in
-an Arrow-batched ``mapInPandas`` — a map-only pass, no shuffle.  The
-message class is rebuilt once per task from the serialized
-``FileDescriptorProto`` (descriptor handles don't pickle; the proto of
-the descriptor does).
+Python, as ONE Arrow-batched ``mapInPandas`` pass per schema pair that
+decodes key and value together and ships back the decoded structs,
+not the payloads (:func:`~jibaro_spark.codecs.confluent.map_payloads`)
+— map-only, no shuffle.  Each message class is rebuilt once per task
+from the serialized ``FileDescriptorProto`` (descriptor handles don't
+pickle; the proto of the descriptor does).
 
 Supported Spark types (mirrors the reference's Spark→proto3 map,
 ``utils.py:57-88``): string, int/short (int32), long (int64), float,
@@ -22,6 +24,8 @@ nested structs (nested messages) to any depth.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
@@ -218,6 +222,41 @@ def _value_to_msg(msg, value: dict, struct: T.StructType) -> None:
             setattr(msg, field.name, v)
 
 
+def _parser(fdp_bytes: bytes, full_name: str, schema: T.StructType, mode: str):
+    """``bytes -> dict`` for message ``full_name`` under ``mode``; the
+    message class is rebuilt here, once per task on the worker."""
+    cls = _message_class(fdp_bytes, full_name)
+
+    def parse(b):
+        if b is None:
+            return None
+        m = cls()
+        if mode == "permissive":
+            try:
+                m.ParseFromString(bytes(b))
+            except Exception:
+                return None
+            return _msg_to_value(m, schema)
+        m.ParseFromString(bytes(b))
+        return _msg_to_value(m, schema)
+
+    return parse
+
+
+def _spec(
+    schema: T.StructType,
+    message_name: str,
+    package: str = "jibaro",
+    mode: str = "failfast",
+):
+    """``(out_type, make_parse)`` of one payload column for
+    :func:`~jibaro_spark.codecs.confluent.map_payloads`."""
+    fdp_bytes = struct_to_file_descriptor_bytes(schema, message_name, package)
+    return schema, functools.partial(
+        _parser, fdp_bytes, f"{package}.{message_name}", schema, mode
+    )
+
+
 def decode_protobuf_python(
     df: DataFrame,
     payload_col: str,
@@ -228,42 +267,22 @@ def decode_protobuf_python(
     mode: str = "failfast",
 ) -> DataFrame:
     """Parse a protobuf-payload binary column into a typed struct
-    column via Arrow-batched ``mapInPandas`` (map-only; all other
-    columns pass through).  Null payloads yield null structs.
+    column via one Arrow-batched ``mapInPandas`` pass (map-only; all
+    other columns pass through).  Null payloads yield null structs.
 
     ``mode``: ``failfast`` (default — a corrupt frame aborts the
     batch) or ``permissive`` — unparseable frames yield a null
     ``out_col`` routable to quarantine (mirrors
     ``decode_avro_python``)."""
+    from jibaro_spark.codecs.confluent import map_payloads
+
     if mode not in ("failfast", "permissive"):
         raise ValueError(f"decode_protobuf_python: unknown mode {mode!r}")
-    fdp_bytes = struct_to_file_descriptor_bytes(schema, message_name, package)
-    full_name = f"{package}.{message_name}"
-    in_fields = df.schema.fields
-    out_schema = T.StructType(list(in_fields) + [T.StructField(out_col, schema)])
-
-    def mapper(batches):
-        cls = _message_class(fdp_bytes, full_name)
-
-        def parse(b):
-            if b is None:
-                return None
-            m = cls()
-            if mode == "permissive":
-                try:
-                    m.ParseFromString(bytes(b))
-                except Exception:
-                    return None
-                return _msg_to_value(m, schema)
-            m.ParseFromString(bytes(b))
-            return _msg_to_value(m, schema)
-
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[out_col] = pdf[payload_col].map(parse)
-            yield pdf
-
-    return df.mapInPandas(mapper, out_schema)
+    return map_payloads(
+        df,
+        [(payload_col, out_col, *_spec(schema, message_name, package, mode))],
+        df.columns,
+    )
 
 
 def encode_protobuf_python(
@@ -316,82 +335,35 @@ def decode_confluent_batch_protobuf_python(
     ``protobuf_handler.py:59-133``) on the pure-Python codec: wire
     slicing and the distinct-schema-pair loop are the same
     native-expression machinery as the jar path (shared
-    :func:`~jibaro_spark.codecs.confluent.pair_frames` skeleton, incl.
+    :func:`~jibaro_spark.codecs.confluent.decode_pairs_python`, incl.
     the staged many-schema route and the unknown-schema policy); each
-    pair's frame decodes its key/value payloads with exactly that
-    pair's schemas via Arrow ``mapInPandas``.
+    pair's frame decodes its key and value payloads with exactly that
+    pair's schemas in one Arrow ``mapInPandas`` pass.  Keys parse as
+    ``key_message_name`` in package ``jibarokey``, values as
+    ``message_name`` in ``jibaro``.
 
     ``schema_resolver(role, schema_id) -> StructType`` supplies the
     reader schema per id ("key"/"value" roles) — the id-partitioned
     loop is what makes mixed-schema batches (in-flight schema
     evolution) decode correctly.  Returns ``[(pair, DataFrame)]``.
     """
-    from pyspark.sql import functions as F
+    from jibaro_spark.codecs.confluent import decode_pairs_python
 
-    from jibaro_spark.codecs.confluent import (
-        KAFKA_META_COLS,
-        SPILL_THRESHOLD,
-        pair_frames,
-        resolve_schema_or_policy,
-        split_wire_format,
-    )
+    def spec_for(role, schema):
+        if role == "key":
+            return _spec(schema, key_message_name, "jibarokey")
+        return _spec(schema, message_name)
 
-    sliced = split_wire_format(batch, "protobuf")
-    out = []
-    for key_id, value_id, part in pair_frames(
-        sliced,
+    return decode_pairs_python(
+        batch,
+        "protobuf",
+        schema_resolver,
+        spec_for,
         on_tombstone,
         scratch_dir,
-        SPILL_THRESHOLD if spill_threshold is None else spill_threshold,
-    ):
-        pair = (key_id, value_id)
-        kschema, kq = resolve_schema_or_policy(
-            schema_resolver, "key", key_id, pair, on_unknown_schema
-        )
-        vschema, vq = resolve_schema_or_policy(
-            schema_resolver, "value", value_id, pair, on_unknown_schema
-        )
-        if (key_id is not None and kschema is None) or (
-            value_id is not None and vschema is None
-        ):
-            if kq or vq:  # keep: raw-binary dead-letter frame
-                out.append(
-                    (
-                        pair,
-                        part.select(
-                            F.col("keyPayload").alias("key"),
-                            F.col("valuePayload").alias("value"),
-                            *[c for c in KAFKA_META_COLS if c in part.columns],
-                            "keySchemaId",
-                            "valueSchemaId",
-                        ),
-                    )
-                )
-            continue
-        # the raw binary key/value columns are superseded by the typed
-        # structs about to take their names
-        part = part.drop("key", "value")
-        if value_id is not None:
-            part = decode_protobuf_python(
-                part, "valuePayload", vschema,
-                message_name, out_col="value",
-            )
-        else:
-            part = part.withColumn("value", F.lit(None))
-        if key_id is not None:
-            part = decode_protobuf_python(
-                part, "keyPayload", kschema,
-                key_message_name, out_col="key", package="jibarokey",
-            )
-        else:
-            part = part.withColumn("key", F.lit(None).cast("string"))
-        keep = (
-            ["key", "value"]
-            + [c for c in KAFKA_META_COLS if c in part.columns]
-            + ["keySchemaId", "valueSchemaId"]
-        )
-        out.append(((key_id, value_id), part.select(*keep)))
-    return out
+        spill_threshold,
+        on_unknown_schema,
+    )
 
 
 def encode_confluent_protobuf_python(

@@ -133,6 +133,31 @@ def compact(
     return True
 
 
+#: The Spark type ``createDataFrame`` infers for each Python scalar
+#: (bool first: it is an int subclass).
+_INFERRED_TYPES = ((bool, "boolean"), (int, "bigint"), (float, "double"), (str, "string"))
+
+
+def _literal_row(
+    spark: SparkSession, row: dict, types: "dict[str, str] | None" = None
+) -> DataFrame:
+    """One-row DataFrame of ``row``'s values, built in the JVM: a
+    one-partition ``range`` projected to literals, so writing it is one
+    task and one file and starts no Python worker (``createDataFrame``
+    ships the row through a ``PythonRDD`` over ``defaultParallelism``
+    partitions).  Columns come in sorted key order with the types
+    ``createDataFrame([row])`` infers, unless ``types`` names one."""
+    cols = []
+    for k, v in sorted(row.items()):
+        t = (types or {}).get(k) or next(
+            (t for py, t in _INFERRED_TYPES if isinstance(v, py)), None
+        )
+        if t is None:
+            raise TypeError(f"cannot infer a Spark type for {k}={v!r}")
+        cols.append(F.lit(v).cast(t).alias(k))
+    return spark.range(0, 1, 1, 1).select(*cols)
+
+
 def append_history_metrics(
     spark: SparkSession,
     catalog: Catalog,
@@ -147,6 +172,9 @@ def append_history_metrics(
     Delta path appends the latest ``DeltaTable.history(1)`` row; the
     parquet emulation appends a minimal metrics row from file listing.
     Schema evolves with ``mergeSchema`` like the reference (K2/K8).
+    Off the Delta path the row is built from literals in the JVM
+    (:func:`_literal_row`): each append is one task writing one file,
+    with no Python worker.
     """
     from jibaro_spark import txlog
 
@@ -160,17 +188,16 @@ def append_history_metrics(
         # row shape the Delta path gets from DeltaTable.history(1);
         # limit=1 reads ONE log file, not the whole history per merge
         c = txlog.history(path, limit=1)[0]
-        hist = spark.createDataFrame(
-            [
-                {
-                    "version": int(c["version"]),
-                    "operation": str(c["operation"]),
-                    "numAdded": int(c.get("num_added", 0)),
-                    "numFiles": stats.num_files,
-                    "sizeBytes": stats.size_bytes,
-                    **({k: str(v) for k, v in (extra or {}).items()}),
-                }
-            ]
+        hist = _literal_row(
+            spark,
+            {
+                "version": int(c["version"]),
+                "operation": str(c["operation"]),
+                "numAdded": int(c.get("num_added", 0)),
+                "numFiles": stats.num_files,
+                "sizeBytes": stats.size_bytes,
+                **({k: str(v) for k, v in (extra or {}).items()}),
+            },
         ).withColumn("recordedAt", F.current_timestamp())
         hist.write.mode("append").option("mergeSchema", "true").parquet(hist_path)
         return
@@ -192,9 +219,7 @@ def append_history_metrics(
         "sizeBytes": stats.size_bytes,
         **(extra or {}),
     }
-    hist = spark.createDataFrame([row]).withColumn(
-        "recordedAt", F.current_timestamp()
-    )
+    hist = _literal_row(spark, row).withColumn("recordedAt", F.current_timestamp())
     hist.write.mode("append").option("mergeSchema", "true").parquet(hist_path)
 
 
@@ -579,8 +604,10 @@ def build_bloom_file_index(
         max_rows = max((r["num_rows"] for r in rows), default=1)
         num_bits = 1 << max(13, min(24, math.ceil(math.log2(max(10 * max_rows, 2)))))
     words = _bloom_words(base, col, num_bits, num_hashes)
-    meta = spark.createDataFrame(
-        [(num_bits, num_hashes)], "num_bits int, num_hashes int"
+    meta = _literal_row(
+        spark,
+        {"num_bits": num_bits, "num_hashes": num_hashes},
+        {"num_bits": "int", "num_hashes": "int"},
     )
     words.write.mode("overwrite").parquet(f"{idx_path}/words")
     meta.write.mode("overwrite").parquet(f"{idx_path}/meta")
@@ -852,7 +879,7 @@ def _bloom_candidates(
         return None
     meta = spark.read.parquet(f"{idx_path}/meta").collect()[0]
     num_bits, num_hashes = meta["num_bits"], meta["num_hashes"]
-    vals_df = spark.createDataFrame(
+    vals_df = spark.createDataFrame(  # createDataFrame-ok: multi-row key list
         [(v,) for v in values], f"__k {key_type.simpleString()}"
     )
     pos = vals_df.select(
