@@ -19,12 +19,19 @@ Iteration mechanics on Spark: each round ends in ``localCheckpoint``
 (lineage truncation — without it the plan doubles every round and
 Catalyst analysis goes quadratic) and a single ``count`` action for the
 convergence check.  Both are per-ROUND (≤ ~log n of them), not per-row.
+Small graphs skip the loops: :func:`_route_edges` sends edge lists of
+at most :data:`_DRIVER_EDGE_MAX` rows to an exact driver-side route.
 """
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import FractionalType, IntegralType
+
+_log = logging.getLogger(__name__)
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -58,18 +65,62 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-#: connected_components routes edge lists at or under this row count
-#: through an exact driver-side union-find instead of the distributed
-#: large-star/small-star loop.  200k edges is a few MB collected —
-#: bounded driver work (guide §5's "almost no data work" still holds),
-#: while each distributed round costs ~0.7-1.2 s of fixed job/planning
-#: overhead regardless of size (measured r12: a 254-edge graph spent
-#: 3.0 s of q_minhash_dedup_clusters' 5.4 s inside the loop).  At real
-#: scale the count exceeds the bound and the loop runs unchanged.
-_CC_DRIVER_EDGE_MAX = 200_000
+#: Edge lists at or under this row count take the exact driver-side
+#: route of connected_components and bfs_distances instead of their
+#: distributed loops.  200k edges is a few MB collected — bounded
+#: driver work (guide §5's "almost no data work" still holds), while
+#: each distributed round or level pays fixed job/planning overhead
+#: regardless of size (measured r12: a 254-edge graph spent 3.0 s of
+#: q_minhash_dedup_clusters' 5.4 s inside the CC loop).  At the bound
+#: the driver route still costs less CPU: on a random graph of 199,996
+#: directed edges (local[4], 4 vCPUs) BFS took 3.3 s against the
+#: loop's 5.6 s (1.2 s against 1.8 s at 4 hops), CC 1.6 s against
+#: 48.5 s.  At real scale the count exceeds the bound and the loops
+#: run unchanged.
+_DRIVER_EDGE_MAX = 200_000
 
 
-def _cc_union_find(rows: "list") -> "dict":
+def _route_edges(op: str, edges: DataFrame, bound: int | None = None):
+    """Cost-based router shared by the graph operators with a driver
+    route.  ``edges`` is a normalized ``(src, dst)`` frame.
+
+    It is checkpointed LAZILY and counted once: the count is the
+    router's single job and materializes the checkpoint as a side
+    effect.  At or under ``bound`` (default :data:`_DRIVER_EDGE_MAX`;
+    negative forces the distributed route) the rows are collected
+    through Arrow — no Python worker.  A NULL endpoint sends the graph
+    back to the distributed route (Python cannot order or join NULLs
+    the way Spark does).  Logs one line per decision.
+
+    Returns ``(checkpointed edges, pyarrow.Table or None)``; the table
+    is None on the distributed route.
+    """
+    if bound is None:
+        bound = _DRIVER_EDGE_MAX
+    edges = edges.localCheckpoint(eager=False)
+    n = edges.count()
+    table = edges.toArrow() if n <= bound else None
+    route = "driver" if table is not None else "distributed"
+    if table is not None and any(c.null_count for c in table.columns):
+        table, route = None, "distributed (NULL endpoint)"
+    _log.info("graph route %s: edges=%d bound=%d -> %s", op, n, bound, route)
+    return edges, table
+
+
+def _driver_frame(spark, schema, *columns: list) -> DataFrame:
+    """A driver route's result as a DataFrame with exactly ``schema``,
+    shipped through Arrow: the lineage is a bare ParallelCollectionRDD,
+    with no Python worker."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pydict(
+        dict(zip(schema.names, columns)), schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)  # createDataFrame-ok
+
+
+def _cc_union_find(rows) -> "dict":
     """Exact min-label connected components of a collected edge list:
     returns {node: component_min}.  Union-find with path halving; the
     final label is the minimum node id of the component — identical to
@@ -107,7 +158,7 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    driver_edge_max: int = _CC_DRIVER_EDGE_MAX,
+    driver_edge_max: int | None = None,
 ) -> DataFrame:
     """Label every node of the undirected pair graph with its
     component's minimum node id.
@@ -123,39 +174,47 @@ def connected_components(
     ~2^25, i.e. never for real near-dup graphs; the guard exists so a
     driver bug fails loudly instead of looping.
 
-    Cost-based routing (r12, guide §1.2): the edge list is already
-    checkpointed, so one cheap ``count`` decides the plan — at or
-    under ``driver_edge_max`` rows the components come from an exact
-    driver-side union-find (a bounded collect; the distributed loop's
-    per-round fixed cost dwarfs the data at that size), above it the
-    large-star/small-star loop runs exactly as before.  NULL node ids
-    always take the distributed path (Python ``min`` cannot order
-    them; the loop's join semantics are the pinned behaviour).
-    Bit-identity of the two regimes is pinned in
-    ``tests/test_round12_cc_driver_path.py``.
+    Scale shape: cost-based routing (guide §1.2) through
+    :func:`_route_edges`, shared with :func:`bfs_distances` — one
+    ``count`` of the lazily checkpointed pair list (it also
+    materializes the checkpoint) decides the plan.  At or under
+    ``driver_edge_max`` rows (default :data:`_DRIVER_EDGE_MAX`) the
+    pairs come to the driver through Arrow and the components come
+    from an exact union-find (the distributed loop's per-round fixed
+    cost dwarfs the data at that size); the result goes back through
+    Arrow.  Above it the large-star/small-star loop runs exactly as
+    before, O(log n) rounds of one lazily checkpointed round and one
+    convergence count each.  NULL node ids always take the
+    distributed path (Python ``min`` cannot order them; the loop's
+    join semantics are the pinned behaviour).  Bit-identity of the
+    two regimes is pinned in ``tests/test_round12_cc_driver_path.py``.
     """
     # Materialize the (possibly expensive — e.g. an LSH band join)
     # pair derivation ONCE: nodes and edges below are two consumers,
     # and without this both re-execute the upstream pipeline.
-    norm = pairs.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).localCheckpoint(eager=True)
-    if driver_edge_max >= 0 and norm.count() <= driver_edge_max:
-        rows = [(r[0], r[1]) for r in norm.collect()]
-        if not any(a is None or b is None for a, b in rows):
-            labels = _cc_union_find(rows)
-            # Output schema exactly as the distributed branch builds it
-            # (labels ∪ roots), derived plan-only — no extra jobs.
-            labels_proto = norm.select(
-                F.col("src").alias("node"), F.col("dst").alias("component")
-            )
-            nodes_proto = norm.select("src").union(norm.select("dst"))
-            roots_proto = nodes_proto.select(
-                F.col("src").alias("node"), F.col("src").alias("component")
-            )
-            out_schema = labels_proto.union(roots_proto).schema
-            data = sorted(labels.items())
-            return norm.sparkSession.createDataFrame(data, out_schema)
+    norm, table = _route_edges(
+        "connected_components",
+        pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst")),
+        driver_edge_max,
+    )
+    if table is not None:
+        labels = _cc_union_find(
+            zip(table.column("src").to_pylist(), table.column("dst").to_pylist())
+        )
+        # Output schema exactly as the distributed branch builds it
+        # (labels ∪ roots), derived plan-only — no extra jobs.
+        labels_proto = norm.select(
+            F.col("src").alias("node"), F.col("dst").alias("component")
+        )
+        nodes_proto = norm.select("src").union(norm.select("dst"))
+        roots_proto = nodes_proto.select(
+            F.col("src").alias("node"), F.col("src").alias("component")
+        )
+        out_schema = labels_proto.union(roots_proto).schema
+        nodes = sorted(labels)
+        return _driver_frame(
+            norm.sparkSession, out_schema, nodes, [labels[n] for n in nodes]
+        )
     # Nodes come from the UNFILTERED pairs: a node appearing only as a
     # self-pair (u,u) still owes an output row (its own singleton
     # component) per the contract above — filtering self-loops first
@@ -430,32 +489,44 @@ def bfs_distances(
     Returns ``(node, dist)`` with ``dist`` ∈ [0, max_hops]; source
     nodes get 0; unreachable nodes are absent.
 
-    Scale shape: per level, the frontier ring joins the checkpointed
-    edge list.  While the ring is small (the common case — it is
-    bounded by the ``new.count()`` the level loop already pays for),
-    it is BROADCAST, so the level costs one edge-list SCAN with no
-    edge shuffle and no per-level sort; a ring past the broadcast
-    budget falls back to the co-partitioned hash join (never a
-    broadcast of the graph).  The r6 10× scale smoke caught the old
+    Scale shape: cost-based routing through :func:`_route_edges`,
+    shared with :func:`connected_components` — one ``count`` of the
+    lazily checkpointed, symmetrized edge list decides the plan.  At
+    or under :data:`_DRIVER_EDGE_MAX` directed edges (sf0.01's trade
+    graph: 97k) the edges come to the driver through Arrow and a
+    level-by-level queue BFS runs there; the result goes back through
+    Arrow with exactly the distributed branch's schema.  Above the
+    bound (sf0.1: 1.17M), per level, the frontier ring joins the
+    checkpointed edge list.  While the ring is small (the common case
+    — it is bounded by the ``new.count()`` the level loop already
+    pays for), it is BROADCAST, so the level costs one edge-list SCAN
+    with no edge shuffle and no per-level sort; a ring past the
+    broadcast budget falls back to the co-partitioned hash join (never
+    a broadcast of the graph).  The r6 10× scale smoke caught the old
     always-shuffle shape at 17× for 10× data — per-level sort-merge
     re-sorted the full edge list every hop; the broadcast form is a
     map-side lookup proportional to E per level, with only the
     matched ring shuffled for the distinct.  The anti-join against
-    visited is ring-sized.  Lineage is truncated per level with
-    ``localCheckpoint`` (the iterative-plan rule used by
-    :func:`connected_components`); driver actions are one ``count``
-    per level — O(diameter), never O(rows).
+    visited is ring-sized.  Lineage is truncated per level with a lazy
+    ``localCheckpoint`` that the level's ``count`` materializes (the
+    iterative-plan rule used by :func:`connected_components`): one
+    driver action per level — O(diameter), never O(rows).
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     if not directed:
         e = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    e = e.filter(F.col("src") != F.col("dst")).distinct().localCheckpoint(eager=True)
-    visited = (
-        sources.toDF("node")
-        .distinct()
-        .withColumn("dist", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
+    e = e.filter(F.col("src") != F.col("dst")).distinct()
+    seed = sources.toDF("node").distinct().withColumn("dist", F.lit(0).cast("long"))
+    # the driver route matches ids by Python equality, which agrees
+    # with the loop's join only on same-typed or integral ids
+    ek, sk = e.schema["src"].dataType, seed.schema["node"].dataType
+    keyable = not isinstance(ek, FractionalType) and (
+        ek == sk or isinstance(ek, IntegralType) and isinstance(sk, IntegralType)
     )
+    e, table = _route_edges("bfs_distances", e, None if keyable else -1)
+    if table is not None:
+        return _bfs_on_driver(e, seed, table, max_hops)
+    visited = seed.localCheckpoint(eager=False)
     frontier = visited.select("node")
     n_frontier = visited.count()
     broadcast_limit = 2_000_000  # ring rows; ~16 MB of longs, executor-safe
@@ -465,10 +536,12 @@ def bfs_distances(
         else:
             joined = frontier.join(e, frontier["node"] == e["src"])
         nxt = joined.select(F.col("dst").alias("node")).distinct()
+        # LAZY checkpoint: the count below is the level's single
+        # driver action and materializes it as a side effect
         new = (
             nxt.join(visited, "node", "left_anti")
             .withColumn("dist", F.lit(hop).cast("long"))
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
         n_frontier = new.count()
         if not n_frontier:
@@ -478,6 +551,42 @@ def bfs_distances(
         visited = visited.union(new)
         frontier = new.select("node")
     return visited
+
+
+def _bfs_on_driver(e: DataFrame, seed: DataFrame, table, max_hops: int) -> DataFrame:
+    """:func:`bfs_distances`' driver route over the collected edge
+    ``table``: a level-by-level queue BFS from the deduplicated
+    ``seed`` nodes (a NULL seed keeps distance 0 and reaches nothing,
+    as in the loop's join)."""
+    adj: dict = {}
+    for a, b in zip(table.column("src").to_pylist(), table.column("dst").to_pylist()):
+        adj.setdefault(a, []).append(b)
+    dist = dict.fromkeys(seed.select("node").toArrow().column(0).to_pylist(), 0)
+    n_seed = len(dist)
+    ring = list(dist)
+    for hop in range(1, max_hops + 1):
+        nxt = []
+        for u in ring:
+            for v in adj.get(u, ()):
+                if v not in dist:
+                    dist[v] = hop
+                    nxt.append(v)
+        if not nxt:
+            break
+        ring = nxt
+    # Output schema exactly as the loop builds it, derived plan-only:
+    # the seed alone, or the seed unioned with its level rings (which
+    # widens e.g. int seeds over bigint edges to bigint).
+    out = seed
+    if len(dist) > n_seed:
+        ring_proto = (
+            e.select(F.col("dst").alias("node"))
+            .distinct()
+            .join(seed, "node", "left_anti")
+            .withColumn("dist", F.lit(1).cast("long"))
+        )
+        out = seed.union(ring_proto)
+    return _driver_frame(e.sparkSession, out.schema, list(dist), list(dist.values()))
 
 
 def sssp(

@@ -19,13 +19,15 @@ from pyspark.sql.window import Window
 from jibaro_spark.queries.registry import declare, load_tables
 
 # ---------------------------------------------------------------------------
-# Distributed BFS (level-synchronous) over the bipartite
-# customer–supplier trade graph: who is within N hops of the smallest
-# active customer?  Spark side runs jibaro_spark.operators.graph.
-# bfs_distances (frontier joins, hash-partitioned on node id); the
-# oracle recomputes min-hop distance with a recursive CTE.  At 100 TB
-# the per-level cost is one co-partitioned join of the frontier ring
-# against the edge list — no broadcast of the graph, no path
+# BFS over the bipartite customer–supplier trade graph: who is within
+# N hops of the smallest active customer?  Spark side runs
+# jibaro_spark.operators.graph.bfs_distances; the oracle recomputes
+# min-hop distance with a recursive CTE.  bfs_distances routes on one
+# count of the symmetrized edge list: at sf0.01 (97k directed edges,
+# under the 200k driver bound) the edges are collected through Arrow
+# and a queue BFS runs on the driver; at sf0.1 (1.17M) and at 100 TB
+# the level-synchronous loop runs, each level one join of the frontier
+# ring against the edge list — no broadcast of the graph, no path
 # enumeration (the (node, depth) UNION-dedup in the oracle is the
 # SQL-side equivalent bound).
 _BFS_HOPS = 4
@@ -72,9 +74,9 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    # the BFS seed is a query parameter: one bounded 1-row aggregate
-    root = t["orders"].agg(F.min("o_custkey")).first()[0]
-    sources = spark.createDataFrame([(int(root),)], ["node"])
+    # the BFS seed: a one-row aggregate left as a plan — no driver
+    # round-trip, and no list-fed createDataFrame starting Python workers
+    sources = t["orders"].agg(F.min("o_custkey").cast("long").alias("node"))
     reached = bfs_distances(edges, sources, max_hops=_BFS_HOPS)
     label = F.when(
         F.col("node") >= 0, F.concat(F.lit("c:"), F.col("node").cast("string"))

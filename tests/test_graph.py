@@ -5,7 +5,18 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from jibaro_spark.operators import graph
 from jibaro_spark.operators.graph import connected_components, dedup_clusters
+
+
+@pytest.fixture(params=["driver", "distributed"])
+def bfs_route(request, monkeypatch):
+    """Run a BFS test on both routes: the driver queue BFS the small
+    test graphs take by default, and the distributed level loop,
+    forced by dropping the shared routing bound below every count."""
+    if request.param == "distributed":
+        monkeypatch.setattr(graph, "_DRIVER_EDGE_MAX", -1)
+    return request.param
 
 
 def _labels(spark, edges, **kw):
@@ -106,7 +117,7 @@ def test_triangle_count_matches_numpy_enumeration(spark):
     assert got == expected
 
 
-def test_bfs_distances_chain_and_branch(spark):
+def test_bfs_distances_chain_and_branch(spark, bfs_route):
     """Min-hop distances on a chain with a shortcut: BFS must take the
     shorter route; unreachable nodes are absent; max_hops truncates."""
     from jibaro_spark.operators.graph import bfs_distances
@@ -124,7 +135,7 @@ def test_bfs_distances_chain_and_branch(spark):
     assert got1 == {0: 0, 1: 1, 3: 1}
 
 
-def test_bfs_distances_directed_and_multi_source(spark):
+def test_bfs_distances_directed_and_multi_source(spark, bfs_route):
     from jibaro_spark.operators.graph import bfs_distances
 
     edges = spark.createDataFrame([(0, 1), (1, 2), (2, 0), (3, 2)], ["src", "dst"])
@@ -145,7 +156,7 @@ def test_bfs_distances_directed_and_multi_source(spark):
     assert multi == {0: 0, 3: 0, 1: 1, 2: 1}
 
 
-def test_bfs_distances_matches_python_bfs_on_random_graph(spark):
+def test_bfs_distances_matches_python_bfs_on_random_graph(spark, bfs_route):
     """Cross-check against a textbook queue BFS on a seeded random
     graph (the triangle-count test's pattern)."""
     import random
