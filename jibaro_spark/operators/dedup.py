@@ -819,10 +819,7 @@ def _block_join_skew_safe(
     one keys-only aggregate over both sides (map-side partial counts).
     """
     import math
-    import os
 
-    if os.environ.get("JIBARO_SPARK_EDJ_SKEW", "1") == "0":
-        return dense_exchange(l, "__blk").join(r, ["__blk"])
     spark = l.sparkSession
     n_parts = max(
         spark.sparkContext.defaultParallelism,
@@ -1022,7 +1019,6 @@ def edit_distance_join(
         # the hot block's quadratic verify spreads over k² tasks.
         # Each (l, r) pair matches exactly one (sl, sr) cell → results
         # identical (pinned in tests/test_round13_edj_skew.py).
-        # JIBARO_SPARK_EDJ_SKEW=0 restores the r12 unprobed route.
         if on:
             joined = _block_join_skew_safe(l, r, left_id, right_id)
         else:

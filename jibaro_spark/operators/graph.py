@@ -158,7 +158,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    driver_edge_max: int | None = None,
 ) -> DataFrame:
     """Label every node of the undirected pair graph with its
     component's minimum node id.
@@ -178,16 +177,16 @@ def connected_components(
     :func:`_route_edges`, shared with :func:`bfs_distances` — one
     ``count`` of the lazily checkpointed pair list (it also
     materializes the checkpoint) decides the plan.  At or under
-    ``driver_edge_max`` rows (default :data:`_DRIVER_EDGE_MAX`) the
-    pairs come to the driver through Arrow and the components come
-    from an exact union-find (the distributed loop's per-round fixed
-    cost dwarfs the data at that size); the result goes back through
-    Arrow.  Above it the large-star/small-star loop runs exactly as
-    before, O(log n) rounds of one lazily checkpointed round and one
-    convergence count each.  NULL node ids always take the
-    distributed path (Python ``min`` cannot order them; the loop's
-    join semantics are the pinned behaviour).  Bit-identity of the
-    two regimes is pinned in ``tests/test_round12_cc_driver_path.py``.
+    :data:`_DRIVER_EDGE_MAX` rows the pairs come to the driver through
+    Arrow and the components come from an exact union-find (the
+    distributed loop's per-round fixed cost dwarfs the data at that
+    size); the result goes back through Arrow.  Above it the
+    large-star/small-star loop runs exactly as before, O(log n) rounds
+    of one lazily checkpointed round and one convergence count each.
+    NULL node ids always take the distributed path (Python ``min``
+    cannot order them; the loop's join semantics are the pinned
+    behaviour).  Bit-identity of the two regimes is pinned in
+    ``tests/test_round12_cc_driver_path.py``.
     """
     # Materialize the (possibly expensive — e.g. an LSH band join)
     # pair derivation ONCE: nodes and edges below are two consumers,
@@ -195,7 +194,6 @@ def connected_components(
     norm, table = _route_edges(
         "connected_components",
         pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst")),
-        driver_edge_max,
     )
     if table is not None:
         labels = _cc_union_find(

@@ -107,14 +107,9 @@ def asof_join(
     # sort direction differs.  Balanced keys route through plain
     # windows — and the two windows of ``nearest`` hash-partition on
     # the same __k, so the second reuses the first's exchange.  A hot
-    # key keeps the chunked stitch.  JIBARO_SPARK_ASOF_ADAPTIVE=0
-    # forces the r12 behavior (always-chunked, no probe; A/B gate).
-    import os
-
-    route = None
-    if os.environ.get("JIBARO_SPARK_ASOF_ADAPTIVE", "1") != "0":
-        u = u.localCheckpoint(eager=False)
-        route = carry_routes_plain(u, ["__k"])
+    # key keeps the chunked stitch.
+    u = u.localCheckpoint(eager=False)
+    route = carry_routes_plain(u, ["__k"])
 
     # Ordering invariant: within equal __t, rights (side 0) precede
     # lefts (side 1) so inclusive <=/>= semantics hold; among equal
@@ -788,7 +783,6 @@ def global_row_number(
     collect).  Bit-identity pinned in
     tests/test_round12_ntile_adaptive.py; opt-in per caller (the probe
     re-executes the input subtree, so feed it a pinned/cheap frame).
-    ``JIBARO_SPARK_NTILE_ADAPTIVE=0`` forces the chunked route.
 
     ``with_count=True`` (r13, ADVICE r12 #3) returns ``(df, n)`` —
     BOTH routes already know the exact row count (the adaptive probe
@@ -797,9 +791,7 @@ def global_row_number(
     reuses it instead of paying a second count job over the same
     subtree.
     """
-    import os
-
-    if adaptive and os.environ.get("JIBARO_SPARK_NTILE_ADAPTIVE", "1") != "0":
+    if adaptive:
         n = df.count()
         if n <= _CARRY_PLAIN_MAX_ABS:
             w = Window.orderBy(*[F.col(c) for c in order_cols])
@@ -877,18 +869,11 @@ def ntile_exact(
     pinned in tests/test_round12_ntile_adaptive.py).  Opt-in per
     caller, NOT default: the probe re-executes whatever sits below it,
     so callers must feed it a pinned/cheap input (the adaboost cells
-    lesson).  ``JIBARO_SPARK_NTILE_ADAPTIVE=0`` forces the chunked
-    route (A/B measurement gate).
+    lesson).
     """
     if k < 1:
         raise ValueError(f"ntile_exact: k must be >= 1, got {k}")
-    import os
-
-    if (
-        adaptive
-        and os.environ.get("JIBARO_SPARK_NTILE_ADAPTIVE", "1") != "0"
-        and df.count() <= _CARRY_PLAIN_MAX_ABS
-    ):
+    if adaptive and df.count() <= _CARRY_PLAIN_MAX_ABS:
         w = Window.orderBy(*[F.col(c) for c in order_cols])
         # nullif against a value NTILE can never produce (it is >= 1)
         # keeps the column NULLABLE like the chunked route's output —

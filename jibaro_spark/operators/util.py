@@ -24,14 +24,7 @@ def ensure_parallelism(
     cache-plan matching and ReusedExchange — operators that scan their
     input more than once (e.g. ``exact_quantiles_bucketed``) need a
     deterministic exchange or every pass repeats the scan+shuffle.
-
-    ``JIBARO_SPARK_ENSURE_PARALLELISM=0`` disables the spread globally
-    (measurement/debug gate for within-session A/B comparisons).
     """
-    import os
-
-    if os.environ.get("JIBARO_SPARK_ENSURE_PARALLELISM", "1") == "0":
-        return df
     sc = df.sparkSession.sparkContext
     target = min_partitions or sc.defaultParallelism
     if df.rdd.getNumPartitions() < target:
@@ -65,15 +58,9 @@ def dense_exchange(df: DataFrame, *cols: str, n: int | None = None) -> DataFrame
     opts out of AQE skew-splitting for that join; use only where the
     key distribution is bounded by construction (df-ordered prefix
     grams, capped posting lists).
-
-    ``JIBARO_SPARK_DENSE_EXCHANGE=0`` disables (A/B measurement gate).
     """
-    import os
-
     from pyspark.sql import functions as F
 
-    if os.environ.get("JIBARO_SPARK_DENSE_EXCHANGE", "1") == "0":
-        return df
     spark = df.sparkSession
     if n is None:
         n = max(

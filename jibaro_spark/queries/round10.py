@@ -645,60 +645,32 @@ def q_adaboost_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     # interaction with the lazily-checkpointed cells probe costs more
     # than the one-core partial agg saves.  The unspread scan stays.
     #
-    # r13 (VERDICT r12 #4, gated JIBARO_SPARK_R13_ADA): with the cells
-    # frames now lazily pinned, re-attack the residual differently —
-    # (a) spread ex AND pin it lazily, so BOTH rounds' cells
-    # aggregations read one 32-partition cached projection instead of
-    # two single-row-group parquet scans (round 2's ex3 crossJoin +
-    # explode otherwise re-runs scan+project on one core); (b) the
-    # round-2 (cells2 → wcells) two-step collapses to ONE aggregation
-    # straight off ex3 — decimal sums are exact, so
-    # sum_rows(w(correct)) ≡ sum_groups(n·w(correct)) bit-for-bit and
-    # the second crossJoin of the stump disappears; (c) best1's pin
-    # goes LAZY — the b-broadcast build materializes it, the union
-    # branch reads the cache, no standalone construction job.
-    import os
-
-    _r13 = os.environ.get("JIBARO_SPARK_R13_ADA", "1") != "0"
-    # Both re-measured variants of feeding ex to round 2 lost or
-    # washed again in r13 ABAB (steal ≤0.3%): spread+pin 3.62 vs 3.39
-    # plain-pin; pin-only 3.94 vs 3.86 unpinned.  Default OFF — the
-    # projected scan is cheaper than materializing it.
-    if _r13 and os.environ.get("JIBARO_SPARK_R13_ADA_SPREAD", "0") != "0":
-        from jibaro_spark.operators.util import ensure_parallelism
-
-        ex = ensure_parallelism(ex, by="price").localCheckpoint(eager=False)
-    elif _r13 and os.environ.get("JIBARO_SPARK_R13_ADA_PIN", "0") != "0":
-        ex = ex.localCheckpoint(eager=False)
-
-    def feat_cells(df: DataFrame, extra: list[str]) -> DataFrame:
-        # ONE scan for both feature axes (guide §1.2 "don't make two
-        # passes when one suffices"): explode each example into its
-        # (feat, v) projections and aggregate once — the r11 form
-        # union-aggregated per feature, scanning the examples twice.
-        # Identical cells: GROUP BY (feat, v) over the exploded rows ≡
-        # the union of the two per-feature GROUP BYs.
-        return (
-            df.select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.lit("price").alias("feat"), F.col("price").alias("v")
-                        ),
-                        F.struct(F.lit("day").alias("feat"), F.col("day").alias("v")),
-                    )
-                ).alias("fv"),
-                "pos",
-                *extra,
-            )
-            .groupBy(F.col("fv.feat").alias("feat"), F.col("fv.v").alias("v"), *extra)
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("pos").alias("npos"),
-            )
+    # r13 (VERDICT r12 #4): with the cells frames now lazily pinned,
+    # the residual was re-attacked — round 2 aggregates straight off
+    # ex3 (below) and best1's pin goes lazy.  Spreading and/or pinning
+    # ex so both rounds read one cached projection was re-measured and
+    # rejected in r13 ABAB (steal ≤0.3%): spread+pin 3.62 vs 3.39
+    # plain-pin; pin-only 3.94 vs 3.86 unpinned — the projected scan is
+    # cheaper than materializing it.
+    #
+    # ONE scan for both feature axes (guide §1.2 "don't make two passes
+    # when one suffices"): explode each example into its (feat, v)
+    # projections and aggregate once — the r11 form union-aggregated
+    # per feature, scanning the examples twice.  Identical cells:
+    # GROUP BY (feat, v) over the exploded rows ≡ the union of the two
+    # per-feature GROUP BYs.
+    fv = F.explode(
+        F.array(
+            F.struct(F.lit("price").alias("feat"), F.col("price").alias("v")),
+            F.struct(F.lit("day").alias("feat"), F.col("day").alias("v")),
         )
-
-    cells = feat_cells(ex, [])
+    ).alias("fv")
+    fv_keys = (F.col("fv.feat").alias("feat"), F.col("fv.v").alias("v"))
+    cells = (
+        ex.select(fv, "pos")
+        .groupBy(*fv_keys)
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("pos").alias("npos"))
+    )
 
     # The cumulative-error scan must NOT be Window.partitionBy("feat"):
     # with feat ∈ {price, day} that is a 2-task stage, and `price` is
@@ -791,9 +763,7 @@ def q_adaboost_round(spark: SparkSession, sf_dir: str) -> DataFrame:
         # round-1 aggregation pipeline runs once.  r13: LAZY — the
         # b-broadcast build is the first consumer and materializes it;
         # eager spent a whole extra job on a 1-row frame.
-        .localCheckpoint(
-            eager=not (_r13 and os.environ.get("JIBARO_SPARK_R13_ADA_LAZYB1", "1") != "0")
-        )
+        .localCheckpoint(eager=False)
     )
     b = F.broadcast(
         best1.select(
@@ -815,43 +785,23 @@ def q_adaboost_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_right = F.round(F.exp(-F.col("alpha1")), 10).cast("decimal(28,10)")
     w_wrong = F.round(F.exp(F.col("alpha1")), 10).cast("decimal(28,10)")
     wexpr = F.when(F.col("correct") == 1, w_right).otherwise(w_wrong)
-    if _r13:
-        # ONE aggregation straight off ex3 (r13): fixed-scale decimal
-        # addition is exact, so summing w(correct) per row equals the
-        # grouped n·w(correct) / npos·w(correct) products bit-for-bit
-        # (same decimal(28,0)×decimal(28,10) product expression shape,
-        # so the result type is unchanged too).  Drops the
-        # (feat, v, correct) intermediate shuffle and the second
-        # crossJoin of the stump.
-        wcells = (
-            ex3.select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.lit("price").alias("feat"), F.col("price").alias("v")
-                        ),
-                        F.struct(F.lit("day").alias("feat"), F.col("day").alias("v")),
-                    )
-                ).alias("fv"),
-                (F.lit(1).cast("decimal(28,0)") * wexpr).alias("__w"),
-                (F.col("pos").cast("decimal(28,0)") * wexpr).alias("__wp"),
-            )
-            .groupBy(F.col("fv.feat").alias("feat"), F.col("fv.v").alias("v"))
-            .agg(F.sum("__w").alias("wn"), F.sum("__wp").alias("wpos"))
+    # ONE aggregation straight off ex3 (r13): fixed-scale decimal
+    # addition is exact, so summing w(correct) per row equals the
+    # grouped n·w(correct) / npos·w(correct) products bit-for-bit
+    # (same decimal(28,0)×decimal(28,10) product expression shape, so
+    # the result type is unchanged too).  Drops the (feat, v, correct)
+    # intermediate shuffle and the second crossJoin of the stump.
+    wcells = (
+        ex3.select(
+            fv,
+            (F.lit(1).cast("decimal(28,0)") * wexpr).alias("__w"),
+            (F.col("pos").cast("decimal(28,0)") * wexpr).alias("__wp"),
         )
-    else:
-        cells2 = feat_cells(ex3, ["correct"])
-        wcells = (
-            cells2.crossJoin(b.drop("feat1", "v1", "pol1"))
-            .groupBy("feat", "v")
-            .agg(
-                F.sum(F.col("n").cast("decimal(28,0)") * wexpr).alias("wn"),
-                F.sum(F.col("npos").cast("decimal(28,0)") * wexpr).alias("wpos"),
-            )
-        )
+        .groupBy(*fv_keys)
+        .agg(F.sum("__w").alias("wn"), F.sum("__wp").alias("wpos"))
+    )
     c2, _ = cum_and_tot(
-        wcells, "wn", "wpos", "wl", "pwl", "wnt", "pwt",
-        route=_route1 if _r13 else None,
+        wcells, "wn", "wpos", "wl", "pwl", "wnt", "pwt", route=_route1
     )
     e2 = both_polarities(
         c2,

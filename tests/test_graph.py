@@ -57,12 +57,13 @@ def test_cc_self_loop_only_node_still_emitted(spark):
     assert got == {7: 7, 1: 1, 2: 1}
 
 
-def test_cc_non_convergence_raises(spark):
-    # driver_edge_max=-1 forces the distributed loop (the r12 driver
-    # union-find path has no rounds to bound)
+def test_cc_non_convergence_raises(spark, monkeypatch):
+    # a negative routing bound forces the distributed loop (the r12
+    # driver union-find path has no rounds to bound)
+    monkeypatch.setattr(graph, "_DRIVER_EDGE_MAX", -1)
     df = spark.createDataFrame([(1, 2), (2, 3)], ["src", "dst"])
     with pytest.raises(RuntimeError, match="no convergence"):
-        connected_components(df, max_iter=0, driver_edge_max=-1)
+        connected_components(df, max_iter=0)
 
 
 def test_dedup_clusters_singletons_and_canonical(spark):

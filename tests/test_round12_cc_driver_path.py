@@ -1,19 +1,27 @@
 """r12 cost-based connected-components routing: the driver union-find
-fast path (edge count <= driver_edge_max) must be bit-identical to the
-distributed large-star/small-star loop — rows, labels, AND schema.
+fast path (edge count <= graph._DRIVER_EDGE_MAX) must be bit-identical
+to the distributed large-star/small-star loop — rows, labels, AND schema.
+The distributed loop is forced by dropping that bound below every count.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from jibaro_spark.operators import graph
 from jibaro_spark.operators.graph import connected_components, dedup_clusters
 
 
-def _both(spark, edges, cols=("src", "dst")):
+def _cc_bound(monkeypatch, df, bound: int):
+    with monkeypatch.context() as m:
+        m.setattr(graph, "_DRIVER_EDGE_MAX", bound)
+        return connected_components(df)
+
+
+def _both(spark, monkeypatch, edges, cols=("src", "dst")):
     df = spark.createDataFrame(edges, list(cols))
     fast = connected_components(df)
-    slow = connected_components(df, driver_edge_max=-1)
+    slow = _cc_bound(monkeypatch, df, -1)
     return fast, slow
 
 
@@ -28,47 +36,47 @@ GRAPHS = {
 }
 
 
-def test_cc_driver_path_bit_identity_int(spark):
+def test_cc_driver_path_bit_identity_int(spark, monkeypatch):
     for name, edges in GRAPHS.items():
-        fast, slow = _both(spark, edges)
+        fast, slow = _both(spark, monkeypatch, edges)
         assert fast.schema == slow.schema, name
         assert sorted(map(tuple, fast.collect())) == sorted(
             map(tuple, slow.collect())
         ), name
 
 
-def test_cc_driver_path_bit_identity_string_ids(spark):
+def test_cc_driver_path_bit_identity_string_ids(spark, monkeypatch):
     edges = [("doc-b", "doc-a"), ("doc-a", "doc-c"), ("zz", "zz"), ("m1", "m2")]
-    fast, slow = _both(spark, edges)
+    fast, slow = _both(spark, monkeypatch, edges)
     assert fast.schema == slow.schema
     assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, slow.collect()))
 
 
-def test_cc_null_edges_take_distributed_path(spark):
+def test_cc_null_edges_take_distributed_path(spark, monkeypatch):
     # NULL node ids are unorderable in Python; the router must fall
     # through to the distributed loop and reproduce its exact output.
     edges = [(1, 2), (None, 3), (4, None)]
     df = spark.createDataFrame(edges, ["src", "dst"])
     fast = connected_components(df)  # router sees NULLs -> distributed
-    slow = connected_components(df, driver_edge_max=-1)
+    slow = _cc_bound(monkeypatch, df, -1)
     assert sorted(
         map(tuple, fast.collect()), key=lambda t: (str(t[0]), str(t[1]))
     ) == sorted(map(tuple, slow.collect()), key=lambda t: (str(t[0]), str(t[1])))
 
 
-def test_cc_empty_edge_list(spark):
+def test_cc_empty_edge_list(spark, monkeypatch):
     df = spark.createDataFrame([], "src: bigint, dst: bigint")
     fast = connected_components(df)
-    slow = connected_components(df, driver_edge_max=-1)
+    slow = _cc_bound(monkeypatch, df, -1)
     assert fast.schema == slow.schema
     assert fast.collect() == [] == slow.collect()
 
 
-def test_cc_threshold_boundary(spark):
+def test_cc_threshold_boundary(spark, monkeypatch):
     edges = [(i, i + 1) for i in range(10)]
     df = spark.createDataFrame(edges, ["src", "dst"])
-    at = connected_components(df, driver_edge_max=10)  # count == max -> driver
-    below = connected_components(df, driver_edge_max=9)  # count > max -> loop
+    at = _cc_bound(monkeypatch, df, 10)  # count == max -> driver
+    below = _cc_bound(monkeypatch, df, 9)  # count > max -> loop
     assert sorted(map(tuple, at.collect())) == sorted(map(tuple, below.collect()))
 
 

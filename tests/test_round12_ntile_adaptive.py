@@ -13,9 +13,8 @@ the native ``NTILE(k)`` window.  Pinned here:
   on vs off) for several k, including n % k != 0, k > n, and k = 1;
 * identical schemas across regimes;
 * the routing: a small input with ``adaptive=True`` takes the native
-  window (``ntile`` appears in the plan), the floor forces the
-  chunked route back (no ``ntile`` node — the bucket arithmetic form),
-  and ``JIBARO_SPARK_NTILE_ADAPTIVE=0`` does the same (A/B gate).
+  window (``ntile`` appears in the plan), and the floor forces the
+  chunked route back (no ``ntile`` node — the bucket arithmetic form).
 """
 
 from __future__ import annotations
@@ -64,7 +63,7 @@ def test_matches_native_ntile(spark, frame):
     assert _buckets(frame, 7, False) == native
 
 
-def test_routing_and_env_gate(spark, frame, monkeypatch):
+def test_routing(spark, frame, monkeypatch):
     def plan(df):
         return df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
@@ -76,12 +75,6 @@ def test_routing_and_env_gate(spark, frame, monkeypatch):
     )
     # the floor forces the chunked route (bucket arithmetic, no ntile)
     monkeypatch.setattr(rel, "_CARRY_PLAIN_MAX_ABS", 10)
-    assert "ntile(" not in plan(
-        rel.ntile_exact(frame, 4, ["v", "id"], out_col="b", adaptive=True)
-    )
-    monkeypatch.undo()
-    # the A/B measurement gate forces the chunked route too
-    monkeypatch.setenv("JIBARO_SPARK_NTILE_ADAPTIVE", "0")
     assert "ntile(" not in plan(
         rel.ntile_exact(frame, 4, ["v", "id"], out_col="b", adaptive=True)
     )

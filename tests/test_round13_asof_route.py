@@ -5,11 +5,10 @@ union frame whose decision routes EVERY carry (``nearest`` runs two);
 per-carry ``adaptive=True`` probes were a measured net loss there
 (VERDICT r12 #6).  Pinned here:
 
-* bit-identical asof results across the two regimes
-  (``JIBARO_SPARK_ASOF_ADAPTIVE`` on = shared probe + plain-window
-  routing on balanced keys; off = the r12 always-chunked carries) for
-  all three directions, including NULL-time rows on both sides and
-  ``how='left'`` unmatched rows;
+* bit-identical asof results across the two routes (the shared probe
+  picks plain windows on these balanced keys; zeroed routing bounds
+  force the chunked carries) for all three directions, including
+  NULL-time rows on both sides and ``how='left'`` unmatched rows;
 * ``route_plain`` pass-through on ``grouped_running_carry`` /
   ``grouped_prefix_sum``: an explicit decision skips the probe and
   still produces the chunked/plain-identical values.
@@ -44,21 +43,31 @@ def sides(spark):
     return left, right
 
 
-def _run(monkeypatch, left, right, direction, how, adaptive):
-    monkeypatch.setenv(
-        "JIBARO_SPARK_ASOF_ADAPTIVE", "1" if adaptive else "0"
-    )
-    out = rel.asof_join(
-        left,
-        right,
-        left_on="k",
-        right_on="rk",
-        left_time="lt",
-        right_time="rt",
-        right_tiebreak="rid",
-        how=how,
-        direction=direction,
-    )
+def _run(monkeypatch, left, right, direction, how, plain):
+    probe = rel.carry_routes_plain
+    decisions = []
+    with monkeypatch.context() as m:
+        m.setattr(
+            rel,
+            "carry_routes_plain",
+            lambda *a, **kw: decisions.append(probe(*a, **kw)) or decisions[-1],
+        )
+        if not plain:
+            m.setattr(rel, "_CARRY_PLAIN_MAX_ABS", 0)
+            m.setattr(rel, "_CARRY_PLAIN_SHARE", 0)
+        out = rel.asof_join(
+            left,
+            right,
+            left_on="k",
+            right_on="rk",
+            left_time="lt",
+            right_time="rt",
+            right_tiebreak="rid",
+            how=how,
+            direction=direction,
+        )
+    # one shared probe per join, and it took the route under test
+    assert decisions == [plain]
     return sorted(
         ((r["k"], r["lt"], r["lid"], r["rt"], r["rid"]) for r in out.collect()),
         key=lambda t: tuple((x is None, x) for x in t),
@@ -69,10 +78,10 @@ def _run(monkeypatch, left, right, direction, how, adaptive):
 @pytest.mark.parametrize("how", ["inner", "left"])
 def test_asof_regimes_bit_identical(monkeypatch, sides, direction, how):
     left, right = sides
-    on = _run(monkeypatch, left, right, direction, how, adaptive=True)
-    off = _run(monkeypatch, left, right, direction, how, adaptive=False)
-    assert on == off
-    assert on  # non-vacuous
+    plain = _run(monkeypatch, left, right, direction, how, plain=True)
+    chunked = _run(monkeypatch, left, right, direction, how, plain=False)
+    assert plain == chunked
+    assert plain  # non-vacuous
 
 
 def test_route_plain_passthrough_matches_probe(spark):
